@@ -22,7 +22,8 @@ ONLY the buckets it touches — never the whole table. The anti-join
 reads just those buckets back (partition pruning on ``pk_bucket``),
 and the new side is bucket-tagged with the same function, so at
 100 TB a weekly increment costs O(increment × touched-buckets), not
-O(table).
+O(table). The increment itself is evaluated once per upsert, and an
+empty one touches nothing.
 """
 
 from __future__ import annotations
@@ -106,12 +107,23 @@ class MergeWriter:
         session.py). Running the same increment twice yields an
         identical table: the idempotency contract the reference
         delegates to Redshift.
+
+        The increment is evaluated exactly once: the bucket-tagged
+        ``new`` is materialized (increment-sized, like the merged
+        buckets below) and both the touched-bucket list and the merge
+        read that one materialization. Deriving them from two
+        evaluations would let a nondeterministic increment put rows in
+        a bucket that was never read back, and the dynamic overwrite
+        would then erase that bucket's old rows. An empty increment is
+        a no-op: nothing is read, merged or written.
         """
         if not self._exists(spark):
             self.overwrite(new)
             return
-        new_b = self._bucketed(new)
+        new_b = self._bucketed(new).localCheckpoint(eager=True)
         touched = [r[BUCKET_COL] for r in new_b.select(BUCKET_COL).distinct().collect()]
+        if not touched:
+            return
         old = spark.read.parquet(self.path).where(F.col(BUCKET_COL).isin(touched))
         # eqNullSafe to match upsert_frames: a null-unsafe condition
         # would never match null-key rows, so re-running the same

@@ -14,6 +14,8 @@ pipeline) gets the same scale-aware defaults:
 - UTC session timezone so timestamp semantics are portable (and match
   the DuckDB oracle, which is UTC-naive).
 - Arrow enabled for the Pandas-UDF extension surface.
+- No console progress bars (``spark.ui.showConsoleProgress=false``),
+  so captured logs show warnings and results.
 - The in-repo row-level DSv2 catalog (jvm/SimpleRowLevelCatalog.java)
   is compiled on demand and mounted as catalog ``rowlvl`` so MERGE
   INTO / UPDATE / DELETE SQL execute for real (operators/merge.py
@@ -50,6 +52,51 @@ def _rowlevel_jar() -> str | None:
         return None
 
 
+def session_conf(
+    cpus: int,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+    jar: str | None = None,
+) -> dict[str, str]:
+    """The settings :func:`get_spark` builds its session with.
+    ``extra_conf`` is applied last, so it overrides any default."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        # Parquet TIMESTAMP(NANOS) (the events table) has no native
+        # Spark type; read as long and convert in the reader
+        # (sources/readers.py truncates to micros, matching what
+        # DuckDB/Arrow do when casting ns → us).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.ui.enabled": "false",
+        # No console progress bars: captured test and bench logs keep
+        # only warnings and results.
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # Dynamic partition overwrite: the merge writer (operators/merge.py)
+        # rewrites only affected partitions, never the whole table.
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    }
+    if jar:
+        # classpath confs only take effect at FIRST session creation
+        # (they launch the JVM); getOrCreate on an existing session
+        # ignores them, which is fine — the catalog is already there
+        conf.update(
+            {
+                "spark.jars": jar,
+                "spark.driver.extraClassPath": jar,
+                "spark.sql.catalog.rowlvl": ROWLEVEL_CATALOG_CLASS,
+            }
+        )
+    conf.update(extra_conf or {})
+    return conf
+
+
 def get_spark(
     app_name: str = "batch_processing_on_aws_spark",
     cpus: int | None = None,
@@ -62,39 +109,9 @@ def get_spark(
     supplied by spark-submit and everything here still applies.
     """
     cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or cpus
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # Parquet TIMESTAMP(NANOS) (the events table) has no native
-        # Spark type; read as long and convert in the reader
-        # (sources/readers.py truncates to micros, matching what
-        # DuckDB/Arrow do when casting ns → us).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Dynamic partition overwrite: the merge writer (operators/merge.py)
-        # rewrites only affected partitions, never the whole table.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    )
-    jar = _rowlevel_jar()
-    if jar:
-        # classpath confs only take effect at FIRST session creation
-        # (they launch the JVM); getOrCreate on an existing session
-        # ignores them, which is fine — the catalog is already there
-        builder = (
-            builder.config("spark.jars", jar)
-            .config("spark.driver.extraClassPath", jar)
-            .config("spark.sql.catalog.rowlvl", ROWLEVEL_CATALOG_CLASS)
-        )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    conf = session_conf(cpus, shuffle_partitions, extra_conf, _rowlevel_jar())
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,7 @@
 """Benchmark harness: run the golden queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
-ONE compact JSON line:
+(default /root/testdata/sf0.1) on local[cpus] (this process's CPU
+affinity; $SPARK_GRAFT_CPUS overrides it) and print ONE compact JSON
+line:
 
     {"metric": "...", "value": N, "unit": "sec", "sf": ..., "n_queries": N}
 
@@ -178,16 +179,35 @@ def clear_scratch() -> int:
     its FIRST timed run; the per-query number stays min-of-2 (= the
     standing-output read, the declared timed quantity), and the
     sidecar's ``run_secs`` records the cold first run so the build
-    cost is attributable."""
+    cost is attributable.
+
+    A per-process root (``spark_graft_*_<pid>``) whose process is still
+    alive belongs to a concurrent run and is left alone. Returns the
+    number of roots actually removed."""
     import glob
     import shutil
     import tempfile
 
     n = 0
     for root in glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_*")):
+        suffix = root.rsplit("_", 1)[-1]
+        if suffix.isdigit() and _pid_alive(int(suffix)):
+            continue
         shutil.rmtree(root, ignore_errors=True)
-        n += 1
+        if not os.path.exists(root):
+            n += 1
     return n
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except (ProcessLookupError, OverflowError):
+        # OverflowError: an all-digit content key, not a PID
+        return False
+    except PermissionError:
+        return True  # alive, owned by another user
+    return True
 
 
 def main() -> None:
@@ -198,7 +218,10 @@ def main() -> None:
     except ValueError:
         sf_num = None
     n_scratch_cleared = clear_scratch()
-    spark = get_spark(app_name="bench")
+    # Cores this process may run on; SPARK_GRAFT_CPUS overrides.
+    cpus_detected = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or cpus_detected)
+    spark = get_spark(app_name="bench", cpus=cpus)
 
     qs = {
         n: f
@@ -289,7 +312,6 @@ def main() -> None:
     # at any other core count manufactures false regressions. Skip it
     # there (round-15, additions-only: timings and sidecar are
     # unchanged; only the regression comparison is suppressed).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
     budget_gate_skipped = cpus != 32
     if os.path.exists(budgets_path) and sf_num == 0.1 and not budget_gate_skipped:
         with open(budgets_path) as f:
@@ -365,6 +387,7 @@ def main() -> None:
                 ),
                 "engine_drift_alarm": engine_drift_alarm,
                 "cpus": cpus,
+                "cpus_detected": cpus_detected,
                 "budget_gate_skipped_nonstandard_cpus": budget_gate_skipped,
                 # cold-start accounting (round-15): scratch roots are
                 # cleared before the suite, so each query's first run

@@ -102,3 +102,32 @@ def test_probe_ratios_take_min_of_bracketing_runs():
     # demonstrated best; see test_one_sided_probe_transient)
     f, _, _ = compute_host_factor([1.1, 1.3], _suite(1.2))
     assert abs(f - 1.1) < 1e-12
+
+
+def test_clear_scratch_spares_live_pid_roots(tmp_path, monkeypatch):
+    import subprocess
+    import tempfile
+
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()  # reaped: its PID names no live process
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    live_root = tmp_path / f"spark_graft_vtab_x_{os.getpid()}"
+    dead_root = tmp_path / f"spark_graft_vtab_x_{dead.pid}"
+    # content-keyed roots; an all-digit key is too large to be a PID
+    keyed = [tmp_path / "spark_graft_ssj_ab12cd", tmp_path / "spark_graft_ssj_1234567890123456"]
+    for root in (live_root, dead_root, *keyed):
+        (root / "part").mkdir(parents=True)
+
+    assert bench.clear_scratch() == 3
+    assert live_root.exists()
+    assert not any(r.exists() for r in (dead_root, *keyed))
+
+
+def test_clear_scratch_counts_only_removed_roots(tmp_path, monkeypatch):
+    import shutil
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    (tmp_path / "spark_graft_ssj_ab12cd").mkdir()
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)  # removal fails
+    assert bench.clear_scratch() == 0

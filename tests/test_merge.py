@@ -250,3 +250,57 @@ def test_upsert_survives_static_overwrite_session(spark, tmp_path):
         assert (0, "NEW") in got and (1, "v1") in got
     finally:
         spark.conf.set(conf, prev)
+
+
+def _listing(path):
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_upsert_of_empty_increment_is_a_no_op(spark, tmp_path, monkeypatch):
+    """An empty increment reads no bucket back, writes nothing, and
+    leaves every file of the table as it was."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    path = str(tmp_path / "t")
+    w = MergeWriter(path, keys=["k"], n_buckets=4)
+    w.overwrite(spark.createDataFrame([(i, "v0") for i in range(20)], ["k", "v"]))
+    before = _listing(path)
+
+    def refuse(*_a, **_k):
+        raise AssertionError("an empty increment touched the table")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", refuse)
+    monkeypatch.setattr(DataFrameWriter, "parquet", refuse)
+    w.upsert(spark, spark.createDataFrame([], "k long, v string"))
+    monkeypatch.undo()
+    assert _listing(path) == before
+
+
+def test_upsert_nondeterministic_increment_keeps_old_rows(spark, tmp_path):
+    """The increment is evaluated once. If the touched buckets and the
+    merged rows came from two evaluations, a nondeterministic key could
+    land in a bucket that was never read back, and the dynamic
+    overwrite would erase that bucket's old rows."""
+    import random
+
+    path = str(tmp_path / "t")
+    w = MergeWriter(path, keys=["k"], n_buckets=8)
+    base = spark.createDataFrame([(i, "v0") for i in range(100)], ["k", "v"])
+    w.overwrite(base)
+    assert {r[BUCKET_COL] for r in spark.read.parquet(path).collect()} == set(range(8))
+
+    draw = F.udf(
+        lambda: random.SystemRandom().randrange(10**6, 10**12), "long"
+    ).asNondeterministic()
+    rounds = 6
+    for _ in range(rounds):
+        inc = spark.range(1).select(draw().alias("k"), F.lit("new").alias("v"))
+        w.upsert(spark, inc)
+
+    got = {r["k"]: r["v"] for r in w.read(spark).collect()}
+    assert {k: v for k, v in got.items() if k < 100} == {i: "v0" for i in range(100)}
+    assert sorted(v for k, v in got.items() if k >= 100) == ["new"] * rounds

@@ -84,6 +84,16 @@ def test_full_flow_and_idempotency(pipe):
     assert p.datetime_dim().count() == 7  # 3 from week1 + 4 from week2
 
 
+def test_batch_is_parsed_once(pipe):
+    """The frame a weekly batch returns reads the one materialized copy
+    of the parsed CSV, not the CSV itself."""
+    p, raw = pipe
+    fact = p.process_journey_batch(str(raw / "week1.csv"))
+    plan = fact._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan csv" not in plan
+    assert sorted(r["rental_id"] for r in fact.collect()) == [100, 101]
+
+
 def test_weather_sparse_columns_dropped(pipe):
     p, _ = pipe
     cols = p.weather().columns
